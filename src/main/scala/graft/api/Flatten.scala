@@ -1,11 +1,13 @@
 package graft.api
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import graft.model._
 import graft.plan.FlattenPlanner
 import graft.meta.Metadata
 import graft.sinks.Sinks
+import graft.util.ConcurrentJobs
 
 import scala.collection.immutable.ListMap
 
@@ -39,8 +41,8 @@ object Flatten {
   }
 
   /** Flatten a parsed DataFrame of documents. `analyze=true` runs the A1/A4
-    * metadata aggregations (one job per table); skip it when only the data
-    * is needed.
+    * metadata aggregations (one [[Metadata.analyze]] job per table); skip
+    * it when only the data is needed.
     *
     * One parse, many tables: the input is persisted (MEMORY_AND_DISK)
     * while multiple child tables are derived — without this every output
@@ -67,13 +69,54 @@ object Flatten {
     * `tables.csv`, `datapackage.json`, DDL + load scripts, and optionally
     * parquet. `preview` limits sink rows while metadata reflects all data
     * (`docs/options.md:776-794`).
+    *
+    * Every table's CSV and parquet writes run side by side
+    * ([[ConcurrentJobs]]). With `preview == 0` the metadata costs no job
+    * of its own: each table's counts and type guesses are observed on its
+    * first full write (CSV, else parquet). With `preview > 0`, or with
+    * neither sink on, they come from one [[Metadata.analyze]] job per
+    * table. XLSX, SQLite and `--evolve` need the metadata, so they follow
+    * the writes. `datapackage.json` is written last, so a run that fails
+    * writes none; it also leaves nothing persisted.
     */
   def flattenToDir(input: DataFrame, outDir: String,
       opts: FlattenOptions = FlattenOptions(),
       csv: Boolean = true, parquet: Boolean = false, sqlScripts: Boolean = false,
       xlsx: Boolean = false, evolve: Boolean = false,
-      stats: Boolean = false, sqliteDb: Boolean = false): FlattenResult = {
-    val res = flatten(input, opts, analyze = true)
+      stats: Boolean = false, sqliteDb: Boolean = false): FlattenResult =
+    try {
+      val observe = opts.preview == 0 && (csv || parquet)
+      val planned = flatten(input, opts, analyze = !observe)
+      val observed = writeTables(input.sparkSession.sparkContext, planned, outDir,
+        csv, parquet, observe)
+      val res = if (observe) planned.copy(fields = observed.flatten) else planned
+      writeRest(res, outDir, sqlScripts, xlsx, evolve, stats, sqliteDb)
+      res
+    } finally input.unpersist()
+
+  /** Each table's CSV then parquet write as one task on [[ConcurrentJobs]];
+    * with `observe`, the table's observed fields (in table order).
+    */
+  private def writeTables(sc: SparkContext, res: FlattenResult, outDir: String,
+      csv: Boolean, parquet: Boolean, observe: Boolean): Seq[Seq[Metadata.FieldMeta]] = {
+    val preview = res.opts.preview
+    val tasks = res.names.map { case (name, title) => () => {
+      val df = res.tables(title)
+      val obs = if (observe) Some(Metadata.observe(name, df)) else None
+      val first = obs.fold(df)(_.df)
+      if (csv) Sinks.csvSingleFile(first, s"$outDir/csv", title, preview)
+      if (parquet) Sinks.parquet(if (csv) df else first, s"$outDir/parquet", title, preview)
+      obs.fold(Seq.empty[Metadata.FieldMeta])(_.result())
+    }}
+    ConcurrentJobs.runAll(sc, "flatten-sink", tasks)
+  }
+
+  /** Everything after the table writes: `stats`, `--evolve`, XLSX, SQLite,
+    * the SQL scripts and the metadata files, `datapackage.json` last.
+    */
+  private def writeRest(res: FlattenResult, outDir: String, sqlScripts: Boolean,
+      xlsx: Boolean, evolve: Boolean, stats: Boolean, sqliteDb: Boolean): Unit = {
+    val opts = res.opts
     // `stats` (`docs/options.md:758-774`): A2 min/max/distinct per field,
     // embedded in datapackage.json. One extra aggregation job per table;
     // like the counts, stats reflect ALL data even under `preview`.
@@ -96,10 +139,6 @@ object Flatten {
           Metadata.evolveScript(existing, res.groupedFields, postgres = false))
         Some(Metadata.mergeFields(existing, res.groupedFields))
       } else None
-    res.tables.foreach { case (name, df) =>
-      if (csv) Sinks.csvSingleFile(df, s"$outDir/csv", name, opts.preview)
-      if (parquet) Sinks.parquet(df, s"$outDir/parquet", name, opts.preview)
-    }
     if (xlsx) {
       val limited = res.tables.toSeq.map { case (n, df) =>
         n -> (if (opts.preview > 0) df.limit(opts.preview) else df)
@@ -137,6 +176,14 @@ object Flatten {
       }
       graft.sinks.SqliteSink.writeSpecs(specs, s"$outDir/sqlite.db")
     }
+    if (sqlScripts) {
+      Sinks.writeString(s"$outDir/postgresql/postgresql_schema.sql", res.ddl)
+      Sinks.writeString(s"$outDir/postgresql/postgresql_load.sql",
+        Metadata.postgresLoadScript(res.tables.keys.toSeq))
+      Sinks.writeString(s"$outDir/sqlite/sqlite_schema.sql", res.ddl)
+      Sinks.writeString(s"$outDir/sqlite/sqlite_load.sql",
+        Metadata.sqliteLoadScript(res.tables.keys.toSeq))
+    }
     Sinks.writeString(s"$outDir/fields.csv", res.fieldsCsv)
     Sinks.writeString(s"$outDir/tables.csv", res.tablesCsv)
     // after an evolve, the written datapackage must describe the MERGED
@@ -149,15 +196,5 @@ object Flatten {
         Metadata.datapackage(res.groupedFields, opts.mainTableName, res.names.toMap,
           statsByTable)
     })
-    if (sqlScripts) {
-      Sinks.writeString(s"$outDir/postgresql/postgresql_schema.sql", res.ddl)
-      Sinks.writeString(s"$outDir/postgresql/postgresql_load.sql",
-        Metadata.postgresLoadScript(res.tables.keys.toSeq))
-      Sinks.writeString(s"$outDir/sqlite/sqlite_schema.sql", res.ddl)
-      Sinks.writeString(s"$outDir/sqlite/sqlite_load.sql",
-        Metadata.sqliteLoadScript(res.tables.keys.toSeq))
-    }
-    input.unpersist()
-    res
   }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Cols
 
 /** Field type guessing (SURVEY.md §2.5 A4).
   *
@@ -76,7 +77,7 @@ object TypeGuess {
     val dynamic = df.schema.fields.filter(f => staticType(f.dataType).isEmpty)
     if (dynamic.isEmpty) static
     else {
-      val aggs = dynamic.map(f => guessAgg(col(s"`${f.name}`")).as(f.name)).toSeq
+      val aggs = dynamic.map(f => guessAgg(Cols.col(f.name)).as(f.name)).toSeq
       val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
       static ++ dynamic.zipWithIndex.map { case (f, i) => f.name -> row.getString(i) }
     }

@@ -1,8 +1,14 @@
 package graft.meta
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.TypeGuess
+import graft.util.Cols
+
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Output metadata generators (SURVEY.md §2.9 K6/K7).
   *
@@ -22,22 +28,69 @@ object Metadata {
     * non-null values — the reference counts key presence,
     * `docs/outputs.md:72-73`) and guessed type. ONE aggregation job per
     * table: all counts and all type-guess lattice folds together.
+    *
+    * `flattenToDir` with `preview == 0` gets the same rows without this
+    * job, from [[observe]] on its first sink write; this stays for
+    * `preview > 0` (the counts must cover rows the sinks do not write),
+    * `flatten(analyze = true)` and every caller without a sink.
     */
   def analyze(tableName: String, df: DataFrame): Seq[FieldMeta] = {
-    val fields = df.schema.fields
-    if (fields.isEmpty) return Nil
-    val countAggs = fields.map(f => count(col(s"`${f.name}`")).as(s"c_${f.name}"))
-    val dynFields = fields.filter(f => TypeGuess.staticType(f.dataType).isEmpty)
-    val typeAggs  = dynFields.map(f => TypeGuess.guessAgg(col(s"`${f.name}`")).as(s"t_${f.name}"))
-    val aggs = (countAggs ++ typeAggs).toSeq
+    val (aggs, decode) = fieldAggs(tableName, df.schema)
+    if (aggs.isEmpty) return Nil
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    decode(row.get)
+  }
+
+  /** A table's [[analyze]] rows riding on an action of the caller's: `df`
+    * carries the same aggregates as observed metrics (`Dataset.observe`),
+    * so the sink write that consumes it computes them in its own tasks.
+    * Call `result` only after an action on `df` has returned successfully.
+    */
+  final class ObservedFields private[Metadata] (val df: DataFrame,
+      fetch: () => Seq[FieldMeta]) {
+    def result(): Seq[FieldMeta] = fetch()
+  }
+
+  /** How long `result` waits for the metrics after the action returned. */
+  private val ObservedWait = 30.seconds
+
+  def observe(tableName: String, df: DataFrame): ObservedFields = {
+    val (aggs, decode) = fieldAggs(tableName, df.schema)
+    if (aggs.isEmpty) return new ObservedFields(df, () => Nil)
+    val obs = Observation()
+    new ObservedFields(df.observe(obs, aggs.head, aggs.tail: _*), () => {
+      // the session's query listener delivers the metrics right after the
+      // action; should that event never come, the wait ends and the
+      // separate aggregation job computes the same rows
+      val row = try Some(Await.result(obs.future, ObservedWait))
+        catch { case _: TimeoutException => None }
+      row.filter(_.length == aggs.size) match {
+        case Some(r) => decode(r.get)
+        case None    => analyze(tableName, df)
+      }
+    })
+  }
+
+  /** The A1+A4 aggregates of one table (aggregate i aliased `m<i>`) and the
+    * decoder of their values by position — the one definition behind both
+    * [[analyze]] and [[observe]], so the two paths cannot drift apart.
+    */
+  private def fieldAggs(tableName: String, schema: StructType)
+      : (Seq[Column], (Int => Any) => Seq[FieldMeta]) = {
+    val fields = schema.fields.toSeq
+    val dynFields = fields.filter(f => TypeGuess.staticType(f.dataType).isEmpty)
+    val aggs = (fields.map(f => count(Cols.col(f.name))) ++
+      dynFields.map(f => TypeGuess.guessAgg(Cols.col(f.name))))
+      .zipWithIndex.map { case (c, i) => c.as(s"m$i") }
     val dynIdx = dynFields.map(_.name).zipWithIndex.toMap
-    fields.zipWithIndex.map { case (f, i) =>
-      val tpe = TypeGuess.staticType(f.dataType).getOrElse(row.getString(fields.length + dynIdx(f.name)))
+    val decode = (value: Int => Any) => fields.zipWithIndex.map { case (f, i) =>
+      val tpe = TypeGuess.staticType(f.dataType)
+        .getOrElse(value(fields.length + dynIdx(f.name)).asInstanceOf[String])
       // _link/_link_* are always text with count = rows (non-null anyway)
       FieldMeta(tableName, f.name, if (f.name.startsWith("_link")) TypeGuess.Text else tpe,
-        f.name, row.getLong(i))
-    }.toSeq
+        f.name, value(i).asInstanceOf[Long])
+    }
+    (aggs, decode)
   }
 
   /** A2 `stats` (`/root/reference/docs/options.md:758-774`): per-field
@@ -55,7 +108,7 @@ object Metadata {
     val fields = df.schema.fields
     if (fields.isEmpty) return Nil
     val aggs = fields.flatMap { f =>
-      val c = col(s"`${f.name}`")
+      val c = Cols.col(f.name)
       Seq(min(c).cast("string"), max(c).cast("string"),
         if (exact) count_distinct(c) else approx_count_distinct(c))
     }.toSeq

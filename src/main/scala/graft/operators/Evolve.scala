@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Cols
 
 /** Schema-evolution union (SURVEY.md §2.7 U1/U2).
   *
@@ -37,8 +38,8 @@ object Evolve {
       val present = df.schema.fields.map(f => f.name -> f.dataType).toMap
       df.select(ordered.toSeq.map { case (name, target) =>
         present.get(name) match {
-          case Some(t) if t == target => col(s"`$name`")
-          case Some(_)                => col(s"`$name`").cast(target)
+          case Some(t) if t == target => Cols.col(name)
+          case Some(_)                => Cols.col(name).cast(target)
           case None                   => lit(null).cast(target).as(name)
         }
       }: _*)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model._
+import graft.util.Cols.quoted
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
@@ -431,6 +432,4 @@ object FlattenPlanner {
   /** Predicate: at least one field of the struct is non-null. */
   private def anyNonNull(st: StructType, access: String => Column): Column =
     st.fields.map(f => access(f.name).isNotNull).reduce(_ || _)
-
-  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
 }

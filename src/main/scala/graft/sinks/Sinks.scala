@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Cols
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Output sinks (SURVEY.md §2.9).
@@ -35,7 +36,7 @@ object Sinks {
   def csvSingleFile(df: DataFrame, dir: String, name: String, limit: Int = 0): Unit = {
     val limited = if (limit > 0) df.limit(limit) else df
     val rendered = limited.select(limited.schema.fields.map(f =>
-      render(col(s"`${f.name}`"), f.dataType).as(f.name)).toSeq: _*)
+      render(Cols.col(f.name), f.dataType).as(f.name)).toSeq: _*)
     val tmp = s"$dir/.tmp_$name"
     rendered.coalesce(1).write.mode("overwrite").option("header", true)
       .option("emptyValue", "")

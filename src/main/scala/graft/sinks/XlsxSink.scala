@@ -30,6 +30,8 @@ object XlsxSink {
 
   def write(tables: Seq[(String, DataFrame)], path: String,
       maxRowsPerSheet: Int = ExcelMaxRows - 1): Unit = {
+    Option(java.nio.file.Paths.get(path).toAbsolutePath.getParent)
+      .foreach(java.nio.file.Files.createDirectories(_))
     val zos = new ZipOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     try {
       val names = sheetNames(tables.map(_._1))
